@@ -2,6 +2,7 @@
 # Local mirror of the driver's per-round gate:
 #   t1 smoke  -> entry() at sf0.001
 #   t2 checks -> queries() vs oracle_sql() at sf0.01
+#   parity    -> self-contained operator snapshots (repository inputs)
 #   goldens   -> fixture snapshots
 #   plans     -> physical-plan properties
 #   tests     -> python -m pytest -x -q
@@ -24,6 +25,9 @@ EOF
 
 echo "== oracle checks (sf0.01) =="
 python scripts/check_oracles.py
+
+echo "== parity goldens (self-contained) =="
+python scripts/gen_goldens.py --parity --check
 
 echo "== goldens =="
 python scripts/gen_goldens.py --check

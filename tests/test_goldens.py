@@ -1,9 +1,15 @@
-"""Snapshot parity over the reference's own fixture corpus.
+"""Snapshot parity.
 
-Pins the deterministic configuration's output on all 15 sample pages
-(SURVEY.md §5.2.2).  The goldens were generated by
-``scripts/gen_goldens.py`` and are committed; any kernel change that
-shifts extraction output fails here.
+* Over the reference's own fixture corpus: pins the deterministic
+  configuration's output on all 15 sample pages (SURVEY.md §5.2.2);
+  skipped where that corpus is not present.
+* Over the self-contained parity corpus (``goldens/parity_corpus.json``,
+  built from repository inputs only): pins the Spark extraction
+  operators, the per-turn envelopes and the DOM trees byte for byte;
+  never skipped.
+
+The goldens were generated by ``scripts/gen_goldens.py`` and are
+committed; any kernel change that shifts extraction output fails here.
 """
 
 import json
@@ -11,7 +17,10 @@ import os
 
 import pytest
 
-from scripts.gen_goldens import GOLDENS_PATH, SAMPLES_DIR, build
+from scripts.gen_goldens import (
+    GOLDENS_PATH, PARITY_CORPUS_PATH, PARITY_GOLDENS_PATH, SAMPLES_DIR,
+    build, build_parity, diff_parity,
+)
 
 
 @pytest.mark.skipif(not os.path.isdir(SAMPLES_DIR),
@@ -42,3 +51,14 @@ def test_books_fixture_values():
     assert len(crows) == 75
     links = [r["link"] for r in crows if r.get("link")]
     assert links and all(l.startswith(("http", "/")) for l in links)
+
+
+def test_parity_snapshots_match_goldens(spark):
+    """extract_turns (both prose paths, with and without ts),
+    extract_turns_multi and the per-page envelopes / DOM dumps
+    reproduce the committed parity goldens exactly."""
+    with open(PARITY_CORPUS_PATH, encoding="utf-8") as f:
+        corpus = json.load(f)
+    with open(PARITY_GOLDENS_PATH, encoding="utf-8") as f:
+        expected = json.load(f)
+    assert diff_parity(expected, build_parity(spark, corpus)) == []
