@@ -3557,8 +3557,10 @@ def _ivf_fit(emb, train_limit: int = 0, k: int = None):
                          F.col("e").alias("ce")).collect()]
     # the packed-long argmax (see _ivf_assign) needs cell ids inside
     # [0, 2^42); seeds are vec_ids, checked here on the driver copy
-    assert all(0 <= c < _IVF_ENC_BASE for c, _ in cent_rows), \
-        "IVF seed vec_ids exceed the 2^42 argmax-encoding bound"
+    # (a raise, not an assert: ``python -O`` strips asserts)
+    if not all(0 <= c < _IVF_ENC_BASE for c, _ in cent_rows):
+        raise ValueError(
+            "IVF seed vec_ids exceed the 2^42 argmax-encoding bound")
     for _ in range(_IVF_ITERS):
         cent = spark.createDataFrame(cent_rows, cent_schema)
         assign = _ivf_assign(train, cent)

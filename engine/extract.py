@@ -8,20 +8,32 @@ short-circuit priority logic lives INSIDE the kernel where it can skip
 DOM work, which a per-strategy ``when()`` column could not
 (SURVEY.md §4.1).
 
+There is ONE operator, ``extract_turns_multi``: it runs a set of
+queries over the corpus in one pass, parsing each turn's DOM once and
+running every query's ladder over the shared tree.  ``extract_turns``
+is its one-query case with the ``query_id`` column dropped.
+
 Scale notes:
 
-* The NL query is parsed ONCE on the driver and captured by the UDF
+* The NL queries are parsed ONCE on the driver and captured by the UDF
   closure (a broadcast-sized struct; SURVEY.md §3.5).
 * Rows cross to Python as Arrow record batches
   (``spark.sql.execution.arrow.maxRecordsPerBatch``); all per-row work
-  is plain CPU inside the batch — no per-row Python round trips.
-* Turns with no markup at all (no ``<`` and no HTML entity) take a
-  fast path that emits the exact envelope the full ladder would
-  produce for element-free text (the general parser finds no elements
-  → zero results, ``general_parser.py:106-113``), skipping
-  tokenization entirely — at web scale most turns are prose.
-* The operator is a pure row→row map: no shuffle. Partitioning/skew
-  policy lives in engine/pipeline.py.
+  is plain CPU inside the batch — no per-row Python round trips.  The
+  output batch is assembled column-wise: pass-through columns are the
+  input batch's own Series, repeated once per query.
+* Envelopes that are constant per query never cross the Arrow
+  boundary: queries that cannot extract (entity-less parse crash,
+  missing entity or attributes) are stamped JVM-side for every row,
+  and — with ``jvm_prose_fast_path`` — so are turns with no markup at
+  all (no ``<`` and no HTML entity), whose envelope is what the full
+  ladder produces for element-free text (the general parser finds no
+  elements → zero results, ``general_parser.py:106-113``).  At web
+  scale most turns are prose.
+* Without the JVM split, prose turns take the same constant envelope
+  inside the kernel, skipping tokenization entirely.
+* The operator is a pure row→row map: no shuffle beyond the optional
+  skew salt.  Partitioning/skew policy lives in engine/pipeline.py.
 """
 
 from __future__ import annotations
@@ -32,22 +44,14 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from engine import dom
 from engine.kernels import constants as C
-from engine.parser import extract_from_root, extract_turn
-from engine.query_parse import ParsedQuery, parse_query_hybrid
+from engine.parser import TurnExtraction, extract_from_root
+from engine.query_parse import parse_query_hybrid
 from engine.schema import RESULTS_SCHEMA
 
-
-def _no_markup_fast_path(entity: Optional[str]) -> dict:
-    return {
-        "entity": entity,
-        "results": [],
-        "n_results": 0,
-        "message": f"Found 0 {entity} on this page",
-        "strategy": "general",
-        "status": "no_results",
-        "error": None,
-    }
+# query_id of the one-query case (dropped from extract_turns' output)
+_SINGLE_QUERY_ID = "q"
 
 
 def _stringify_results(results):
@@ -67,172 +71,15 @@ def extract_turns(df: DataFrame, query: str,
                   jvm_prose_fast_path: bool = True,
                   salt_partitions: Optional[int] = None,
                   salt_block: int = 256) -> DataFrame:
-    """Map a transcripts DataFrame to the results schema for one query.
-
-    Input must carry (conv_id, turn_idx, role, text); extra columns are
-    dropped (column pruning reaches the scan because the select below
-    is part of the declarative plan).
-
-    ``matcher_factory`` (optional, executor-side ``() -> Matcher``)
-    plugs in the semantic tiers; one matcher is built per task so its
-    string-pair cache amortizes across the partition — never per row
-    (SURVEY.md §4.1: do not re-encode inside the recursion).
-
-    ``salt_partitions`` (optional) applies the skew-salting
-    repartition on ``(conv_id, turn_idx div salt_block)`` INSIDE this
-    operator, after the prose/markup split — so only markup rows (the
-    CPU-heavy ones) are shuffled and prose rows flow scan→output with
-    no shuffle at all.  Pre-repartitioning the input instead would
-    replay the shuffle once per branch (the plan-check regression this
-    parameter exists to avoid).
-    """
-    # entity-less queries raise TypeError inside the reference's big
-    # try and surface as the parsing-error envelope (quirk; see
-    # engine/query_parse.extract_entity) — at the operator level that
-    # becomes a constant JVM-side envelope for every row, exactly like
-    # bad_query below (the corpus never ships through Python for a
-    # query that can't extract)
-    try:
-        parsed: ParsedQuery = parse_query_hybrid(query)
-        parse_error = None
-    except TypeError as exc:
-        parsed = ParsedQuery()
-        parse_error = f"Parsing error: {exc}"
-    bad_query = parse_error is not None or not parsed.entity \
-        or not parsed.attributes
-    bad_message = parse_error or \
-        "Could not extract entity and attributes from query"
-    bad_status = "parse_error" if parse_error else "bad_query"
-
-    entity = parsed.entity
-    from pyspark.sql import functions as F
-
-    # event-time passthrough keeps streaming aggregations (watermarks
-    # over ts) downstream of the kernel without a stream-stream join
-    has_ts = "ts" in df.columns
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = matcher_factory() if matcher_factory is not None else None
-        for batch in batches:
-            out = {
-                "conv_id": batch["conv_id"],
-                "turn_idx": batch["turn_idx"],
-                "role": batch["role"],
-            }
-            if has_ts:
-                out["ts"] = batch["ts"]
-            n = len(batch)
-            entities = [None] * n
-            results = [None] * n
-            n_results = [0] * n
-            messages = [None] * n
-            strategies = ["none"] * n
-            statuses = ["bad_query"] * n
-            errors = [None] * n
-            nbytes = [0] * n
-
-            if not bad_query:
-                texts = batch["text"]
-                for i in range(n):
-                    text = texts.iat[i]
-                    if text is None:
-                        text = ""
-                    nbytes[i] = len(text.encode("utf-8", errors="ignore"))
-                    if "<" not in text and "&" not in text:
-                        row = _no_markup_fast_path(entity)
-                    else:
-                        t = extract_turn(text, parsed, similarity_threshold,
-                                         matcher)
-                        row = {
-                            "entity": t.entity,
-                            "results": _stringify_results(t.results),
-                            "n_results": t.n_results, "message": t.message,
-                            "strategy": t.strategy, "status": t.status,
-                            "error": t.error,
-                        }
-                    entities[i] = row["entity"]
-                    results[i] = row["results"]
-                    n_results[i] = row["n_results"]
-                    messages[i] = row["message"]
-                    strategies[i] = row["strategy"]
-                    statuses[i] = row["status"]
-                    errors[i] = row["error"]
-            else:
-                for i in range(n):
-                    messages[i] = bad_message
-                    statuses[i] = bad_status
-                    results[i] = []
-
-            out["entity"] = pd.Series(entities, dtype=object)
-            out["results"] = pd.Series(results, dtype=object)
-            out["n_results"] = pd.Series(n_results, dtype="int32")
-            out["message"] = pd.Series(messages, dtype=object)
-            out["strategy"] = pd.Series(strategies, dtype=object)
-            out["status"] = pd.Series(statuses, dtype=object)
-            out["error"] = pd.Series(errors, dtype=object)
-            out["text_nbytes"] = pd.Series(nbytes, dtype="int64")
-            yield pd.DataFrame(out)
-
-    if has_ts:
-        from pyspark.sql.types import StructField, StructType, TimestampType
-        schema = StructType(
-            RESULTS_SCHEMA.fields[:3]
-            + [StructField("ts", TimestampType(), True)]
-            + RESULTS_SCHEMA.fields[3:])
-        pruned = df.select("conv_id", "turn_idx", "role", "ts", "text")
-    else:
-        schema = RESULTS_SCHEMA
-        pruned = df.select("conv_id", "turn_idx", "role", "text")
-
-    def _salt(d: DataFrame) -> DataFrame:
-        if salt_partitions:
-            return d.repartition(
-                salt_partitions, "conv_id",
-                (F.col("turn_idx") / F.lit(salt_block)).cast("int"))
-        return d
-
-    if bad_query:
-        # degenerate case: every output field is a constant or a JVM
-        # expression — never ship the corpus through Python just to
-        # stamp bad_query envelopes
-        return pruned.select(
-            F.col("conv_id"), F.col("turn_idx"), F.col("role"),
-            *([F.col("ts")] if has_ts else []),
-            F.lit(entity).alias("entity"),
-            F.expr("array()").cast(schema["results"].dataType).alias("results"),
-            F.lit(0).cast("int").alias("n_results"),
-            F.lit(bad_message).alias("message"),
-            F.lit("none").alias("strategy"),
-            F.lit(bad_status).alias("status"),
-            F.lit(parse_error).cast("string").alias("error"),
-            F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
-             .alias("text_nbytes"))
-
-    if not jvm_prose_fast_path:
-        return _salt(pruned).mapInPandas(run, schema=schema)
-
-    # JVM prose fast path: turns with no markup at all never cross the
-    # Arrow boundary — their (deterministic) envelope is computed with
-    # codegen'd expressions and unioned back.  At transcript scale most
-    # turns are prose, so this removes the bulk of the Python transfer.
-    is_markup = (F.col("text").isNotNull()
-                 & (F.col("text").contains("<") | F.col("text").contains("&")))
-    markup_out = _salt(pruned.filter(is_markup)).mapInPandas(run, schema=schema)
-    prose = pruned.filter(~is_markup)
-    prose_cols = [
-        F.col("conv_id"), F.col("turn_idx"), F.col("role"),
-        *([F.col("ts")] if has_ts else []),
-        F.lit(entity).alias("entity"),
-        F.expr("array()").cast(schema["results"].dataType).alias("results"),
-        F.lit(0).cast("int").alias("n_results"),
-        F.lit(f"Found 0 {entity} on this page").alias("message"),
-        F.lit("general").alias("strategy"),
-        F.lit("no_results").alias("status"),
-        F.lit(None).cast("string").alias("error"),
-        F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
-         .alias("text_nbytes"),
-    ]
-    return markup_out.unionAll(prose.select(*prose_cols))
+    """Map a transcripts DataFrame to the results schema for one query:
+    ``extract_turns_multi`` over ``{query}`` without the ``query_id``
+    column (see there for the parameters)."""
+    return extract_turns_multi(
+        df, {_SINGLE_QUERY_ID: query}, similarity_threshold,
+        matcher_factory=matcher_factory,
+        jvm_prose_fast_path=jvm_prose_fast_path,
+        salt_partitions=salt_partitions,
+        salt_block=salt_block).drop("query_id")
 
 
 def extract_turns_multi(df: DataFrame, queries: dict,
@@ -243,101 +90,113 @@ def extract_turns_multi(df: DataFrame, queries: dict,
                         salt_block: int = 256) -> DataFrame:
     """Run MANY queries over the corpus in ONE pass.
 
-    ``queries`` maps query_id → NL query string.  Each turn's text is
-    tokenized and DOM-parsed exactly once; every query's strategy
-    ladder then runs over the shared tree — at 100 TB this replaces N
-    scans + N parses with one of each.  Output: one row per
-    (turn, query_id), schema = results schema + leading ``query_id``.
+    ``queries`` maps query_id → NL query string.  Input must carry
+    (conv_id, turn_idx, role, text); ``ts`` rides through when present
+    (event-time pass-through keeps streaming watermarks downstream of
+    the kernel without a stream-stream join); other columns are dropped
+    (column pruning reaches the scan because the select below is part
+    of the declarative plan).  Each turn's text is tokenized and
+    DOM-parsed exactly once; every query's strategy ladder then runs
+    over the shared tree — at 100 TB this replaces N scans + N parses
+    with one of each.  Output: one row per (turn, query_id), schema =
+    leading ``query_id`` + results schema (+ ``ts`` after ``role``).
 
-    ``jvm_prose_fast_path`` (default on — VERDICT r2 item 4 closed the
-    gap with single-query mode): rows with no markup at all and
-    queries that cannot extract (parse-error / bad-query) never cross
-    the Arrow boundary.  Their envelopes are CONSTANT per query, so
-    they are stamped JVM-side by exploding a literal per-query struct
-    array over the row set — the Python kernel only ever sees
-    (markup row × extractable query), which at transcript scale is
-    the small minority of the (turn × query) grid.
+    ``jvm_prose_fast_path`` (default on): rows with no markup at all
+    never cross the Arrow boundary; their per-query constant envelope
+    is stamped JVM-side and unioned back.  Off, every row goes through
+    ONE kernel over ONE input branch — callers that would otherwise
+    rescan their input once per branch (the pipeline, streaming) pass
+    False.  Queries that cannot extract are stamped JVM-side either
+    way, so the kernel only ever sees extractable queries.
+
+    ``matcher_factory`` (optional, executor-side ``() -> Matcher``)
+    plugs in the semantic tiers; one matcher is built per task so its
+    string-pair cache amortizes across the partition — never per row
+    (SURVEY.md §4.1: do not re-encode inside the recursion).
+
+    ``salt_partitions`` (optional) applies the skew-salting
+    repartition on ``(conv_id, turn_idx div salt_block)`` INSIDE this
+    operator, on the kernel's input only — so with the JVM split only
+    markup rows (the CPU-heavy ones) are shuffled and prose rows flow
+    scan→output with no shuffle at all.  Pre-repartitioning the input
+    instead would replay the shuffle once per branch.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import (
+        StringType, StructField, StructType, TimestampType,
+    )
 
-    from engine import dom
-
-    parsed_queries = []
+    # good: (qid, parsed) pairs for the kernel; bad: (qid, constant
+    # envelope) pairs for queries that cannot extract
+    good, bad = [], []
     for qid, q in sorted(queries.items()):
         try:
-            parsed_queries.append((qid, parse_query_hybrid(q), None))
-        except TypeError as exc:  # reference entity-less crash quirk
-            parsed_queries.append((qid, ParsedQuery(),
-                                   f"Parsing error: {exc}"))
+            parsed = parse_query_hybrid(q)
+        except TypeError as exc:
+            # entity-less queries raise TypeError inside the reference's
+            # big try and surface as the parsing-error envelope (quirk;
+            # see engine/query_parse.extract_entity)
+            err = f"Parsing error: {exc}"
+            bad.append((qid, TurnExtraction(None, [], 0, err, "none",
+                                            "parse_error", err)))
+            continue
+        if parsed.entity and parsed.attributes:
+            good.append((qid, parsed))
+        else:
+            bad.append((qid, TurnExtraction(
+                parsed.entity, [], 0,
+                "Could not extract entity and attributes from query",
+                "none", "bad_query")))
+    # the envelope the ladder gives element-free text, per good query
+    prose = [TurnExtraction(p.entity, [], 0, f"Found 0 {p.entity} on this "
+                            "page", "general", "no_results") for _, p in good]
 
+    has_ts = "ts" in df.columns
+    pass_cols = ["conv_id", "turn_idx", "role"] + (["ts"] if has_ts else [])
+    fields = RESULTS_SCHEMA.fields
+    if has_ts:
+        fields = fields[:3] + [StructField("ts", TimestampType(), True)] \
+            + fields[3:]
     schema = StructType([StructField("query_id", StringType(), False)]
-                        + RESULTS_SCHEMA.fields)
+                        + fields)
     results_type = schema["results"].dataType
-    pruned = df.select("conv_id", "turn_idx", "role", "text")
+    pruned = df.select(*pass_cols, "text")
 
-    def make_run(qlist):
-        """Arrow kernel over the (row × query) grid for ``qlist``
-        (triples of (qid, parsed, parse_error))."""
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            matcher = matcher_factory() if matcher_factory is not None \
-                else None
-            for batch in batches:
-                rows = {name: [] for name in
-                        ("query_id", "conv_id", "turn_idx", "role", "entity",
-                         "results", "n_results", "message", "strategy",
-                         "status", "error", "text_nbytes")}
-                texts = batch["text"]
-                for i in range(len(batch)):
-                    text = texts.iat[i] or ""
-                    nbytes = len(text.encode("utf-8", errors="ignore"))
-                    markup = "<" in text or "&" in text
-                    root = None
-                    if markup:
-                        try:
-                            root = dom.parse_html(text)
-                        except Exception:
-                            root = None
-                    for qid, parsed, q_parse_error in qlist:
-                        if q_parse_error is not None:
-                            t = {"entity": None, "results": [],
-                                 "n_results": 0,
-                                 "message": q_parse_error,
-                                 "strategy": "none",
-                                 "status": "parse_error",
-                                 "error": q_parse_error}
-                        elif not parsed.entity or not parsed.attributes:
-                            t = {"entity": parsed.entity, "results": [],
-                                 "n_results": 0,
-                                 "message": "Could not extract entity and "
-                                            "attributes from query",
-                                 "strategy": "none", "status": "bad_query",
-                                 "error": None}
-                        elif root is None:
-                            t = _no_markup_fast_path(parsed.entity)
-                        else:
-                            te = extract_from_root(root, parsed,
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """Arrow kernel over the (row × extractable query) grid."""
+        matcher = matcher_factory() if matcher_factory is not None else None
+        for batch in batches:
+            texts = batch["text"]
+            n = len(batch)
+            nbytes = [0] * n
+            envs = [[None] * n for _ in good]
+            for i in range(n):
+                text = texts.iat[i] or ""
+                nbytes[i] = len(text.encode("utf-8", errors="ignore"))
+                if "<" in text or "&" in text:
+                    root = dom.parse_html(text)
+                    for env, (_, parsed) in zip(envs, good):
+                        env[i] = extract_from_root(root, parsed,
                                                    similarity_threshold,
                                                    matcher)
-                            t = {"entity": te.entity,
-                                 "results": _stringify_results(te.results),
-                                 "n_results": te.n_results,
-                                 "message": te.message,
-                                 "strategy": te.strategy,
-                                 "status": te.status, "error": te.error}
-                        rows["query_id"].append(qid)
-                        rows["conv_id"].append(batch["conv_id"].iat[i])
-                        rows["turn_idx"].append(batch["turn_idx"].iat[i])
-                        rows["role"].append(batch["role"].iat[i])
-                        rows["text_nbytes"].append(nbytes)
-                        for k in ("entity", "results", "n_results", "message",
-                                  "strategy", "status", "error"):
-                            rows[k].append(t[k])
-                out = pd.DataFrame(rows)
-                out["n_results"] = out["n_results"].astype("int32")
-                out["text_nbytes"] = out["text_nbytes"].astype("int64")
-                yield out
-        return run
+                else:
+                    for env, p in zip(envs, prose):
+                        env[i] = p
+            for (qid, _), env in zip(good, envs):
+                out = {"query_id": qid}
+                out.update((c, batch[c]) for c in pass_cols)
+                out["entity"] = pd.Series([t.entity for t in env],
+                                          dtype=object)
+                out["results"] = pd.Series(
+                    [_stringify_results(t.results) for t in env],
+                    dtype=object)
+                out["n_results"] = pd.Series([t.n_results for t in env],
+                                             dtype="int32")
+                for col in ("message", "strategy", "status", "error"):
+                    out[col] = pd.Series([getattr(t, col) for t in env],
+                                         dtype=object)
+                out["text_nbytes"] = pd.Series(nbytes, dtype="int64")
+                yield pd.DataFrame(out)
 
     def _salt(d: DataFrame) -> DataFrame:
         if salt_partitions:
@@ -346,44 +205,24 @@ def extract_turns_multi(df: DataFrame, queries: dict,
                 (F.col("turn_idx") / F.lit(salt_block)).cast("int"))
         return d
 
-    if not jvm_prose_fast_path:
-        return _salt(pruned).mapInPandas(make_run(parsed_queries),
-                                         schema=schema)
-
-    good = [(qid, parsed, None) for qid, parsed, err in parsed_queries
-            if err is None and parsed.entity and parsed.attributes]
-    bad_entries = []
-    for qid, parsed, err in parsed_queries:
-        if err is not None:
-            bad_entries.append((qid, None, err, "none", "parse_error", err))
-        elif not parsed.entity or not parsed.attributes:
-            bad_entries.append((qid, parsed.entity,
-                                "Could not extract entity and attributes "
-                                "from query", "none", "bad_query", None))
-    prose_entries = [
-        (qid, parsed.entity, f"Found 0 {parsed.entity} on this page",
-         "general", "no_results", None)
-        for qid, parsed, _ in good]
-
     def _const_rows(rows: DataFrame, entries) -> DataFrame:
-        """Stamp one constant envelope per (row, entry) JVM-side: a
-        literal struct array exploded over the row set — codegen'd
-        projection, no Python, no shuffle."""
+        """Stamp one constant envelope per (row, (qid, envelope)) entry
+        JVM-side: a literal struct array exploded over the row set —
+        codegen'd projection, no Python, no shuffle."""
         arr = F.array(*[F.struct(
             F.lit(qid).alias("query_id"),
-            F.lit(entity).cast("string").alias("entity"),
-            F.lit(message).cast("string").alias("message"),
-            F.lit(strategy).alias("strategy"),
-            F.lit(status).alias("status"),
-            F.lit(error).cast("string").alias("error"))
-            for (qid, entity, message, strategy, status, error) in entries])
+            F.lit(t.entity).cast("string").alias("entity"),
+            F.lit(t.message).cast("string").alias("message"),
+            F.lit(t.strategy).alias("strategy"),
+            F.lit(t.status).alias("status"),
+            F.lit(t.error).cast("string").alias("error"))
+            for qid, t in entries])
         return (rows.select(
-            "conv_id", "turn_idx", "role",
+            *pass_cols,
             F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
              .alias("text_nbytes"),
             F.explode(arr).alias("q"))
-            .select(F.col("q.query_id").alias("query_id"),
-                    "conv_id", "turn_idx", "role",
+            .select(F.col("q.query_id").alias("query_id"), *pass_cols,
                     F.col("q.entity").alias("entity"),
                     F.expr("array()").cast(results_type).alias("results"),
                     F.lit(0).cast("int").alias("n_results"),
@@ -393,16 +232,20 @@ def extract_turns_multi(df: DataFrame, queries: dict,
                     F.col("q.error").alias("error"),
                     "text_nbytes"))
 
-    is_markup = (F.col("text").isNotNull()
-                 & (F.col("text").contains("<")
-                    | F.col("text").contains("&")))
     parts = []
-    if good:
+    if good and not jvm_prose_fast_path:
+        parts.append(_salt(pruned).mapInPandas(run, schema=schema))
+    elif good:
+        is_markup = (F.col("text").isNotNull()
+                     & (F.col("text").contains("<")
+                        | F.col("text").contains("&")))
         parts.append(_salt(pruned.filter(is_markup))
-                     .mapInPandas(make_run(good), schema=schema))
-        parts.append(_const_rows(pruned.filter(~is_markup), prose_entries))
-    if bad_entries:
-        parts.append(_const_rows(pruned, bad_entries))
+                     .mapInPandas(run, schema=schema))
+        parts.append(_const_rows(pruned.filter(~is_markup),
+                                 [(qid, t) for (qid, _), t
+                                  in zip(good, prose)]))
+    if bad:
+        parts.append(_const_rows(pruned, bad))
     if not parts:
         return df.sparkSession.createDataFrame([], schema)
     out = parts[0]

@@ -220,6 +220,13 @@ def _completed_work(spark: SparkSession, cfg: JobConfig, input_base: str,
     return matched - stale
 
 
+def _query_keys(cfg: JobConfig) -> List[str]:
+    """The output grain beyond (bucket, conv_id, turn): ``query_id`` in
+    multi-query mode, nothing in single-query mode.  Output partitions,
+    the ordering window and lineage rows are all keyed by it."""
+    return ["query_id"] if cfg.queries else []
+
+
 def _write_output(df: DataFrame, cfg: JobConfig) -> None:
     """Idempotent per-unit write: a crash between a unit's output
     write and its lineage commit means the unit re-runs on resume —
@@ -231,10 +238,9 @@ def _write_output(df: DataFrame, cfg: JobConfig) -> None:
     if cfg.io_format == "iceberg":
         df.writeTo(cfg.output_path).overwritePartitions()
     else:
-        part_cols = ["bucket", "query_id"] if cfg.queries else ["bucket"]
         (df.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(*part_cols).parquet(cfg.output_path))
+         .partitionBy("bucket", *_query_keys(cfg)).parquet(cfg.output_path))
 
 
 class SimulatedFailure(RuntimeError):
@@ -285,6 +291,7 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
             all_groups.append((qs, buckets[i:i + group_size]))
 
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    qkeys = _query_keys(cfg)
     buckets_processed = 0
 
     for gi, (qs, group) in enumerate(all_groups):
@@ -319,8 +326,7 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
 
         # restore stable per-conversation turn order (north rule);
         # in multi-query mode each query's stream orders independently
-        order_keys = ["conv_id", "query_id"] if cfg.queries else ["conv_id"]
-        order = Window.partitionBy(*order_keys).orderBy("turn_idx")
+        order = Window.partitionBy("conv_id", *qkeys).orderBy("turn_idx")
         extracted = extracted.withColumn("turn_seq", F.row_number().over(order))
 
         _write_output(extracted, cfg)
@@ -335,27 +341,20 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
             written = spark.read.table(cfg.output_path)
         else:
             written = spark.read.parquet(cfg.output_path)
+        # one lineage row per (bucket, query): rows_in is that query's
+        # input-turn count for the bucket, so per query sum(rows_in)
+        # reconciles against the input table
         written = written.filter(F.col("bucket").isin(group))
         if cfg.queries:
-            # one lineage row per (bucket, query): rows_in is that
-            # query's input-turn count for the bucket, so per query
-            # sum(rows_in) reconciles against the input table
             written = written.filter(F.col("query_id").isin(list(qs)))
-            stats = written.groupBy("bucket", "query_id").agg(
-                F.count("*").alias("rows_in"),
-                F.sum("n_results").alias("rows_out"),
-                F.sum(F.when(F.col("status") == "parse_error", 1).otherwise(0))
-                 .alias("parse_failures"),
-            ).collect()
-            stat_by_key = {(r.query_id, r.bucket): r for r in stats}
-        else:
-            stats = written.groupBy("bucket").agg(
-                F.count("*").alias("rows_in"),
-                F.sum("n_results").alias("rows_out"),
-                F.sum(F.when(F.col("status") == "parse_error", 1).otherwise(0))
-                 .alias("parse_failures"),
-            ).collect()
-            stat_by_key = {(None, r.bucket): r for r in stats}
+        stats = written.groupBy("bucket", *qkeys).agg(
+            F.count("*").alias("rows_in"),
+            F.sum("n_results").alias("rows_out"),
+            F.sum(F.when(F.col("status") == "parse_error", 1).otherwise(0))
+             .alias("parse_failures"),
+        ).collect()
+        stat_by_key = {(r["query_id"] if qkeys else None, r.bucket): r
+                       for r in stats}
         wall_ms = int((time.time() - t0) * 1000)
         lineage_rows = []
         for qid in qs:

@@ -2,8 +2,10 @@
 
 The reference is strictly request/response (no streaming semantics —
 SURVEY.md §1.3), but a web-scale transcript pipeline also has to drain
-a continuously-landing table.  This module runs the SAME Arrow-batched
-extraction kernel as a stateless streaming transformation:
+a continuously-landing table.  This module runs the ONE extraction
+operator of engine/extract.py (``extract_turns`` is its one-query
+case of ``extract_turns_multi``) as a stateless streaming
+transformation:
 
 * file/Iceberg-append source → ``extract_turns`` → parquet sink with a
   checkpoint: restart-safe exactly-once via Spark's own offset
@@ -79,10 +81,10 @@ def stream_extract_batched(spark: SparkSession, input_path: str,
     the prose rows bypass MapInPandas inside the micro-batch.
 
     ``queries`` (dict query_id → NL query) switches each micro-batch
-    to the MULTI-QUERY single-pass kernel (extract_turns_multi — one
-    DOM parse per turn shared across all queries, prose/bad-query
+    to the multi-query form of the same operator (extract_turns_multi —
+    one DOM parse per turn shared across all queries, prose/bad-query
     envelopes stamped JVM-side), completing the matrix: batch/stream ×
-    single/multi all share the same two operators."""
+    single/multi all run the one extraction operator."""
     from engine.extract import extract_turns_multi
 
     stream = read_transcript_stream(spark, input_path)

@@ -60,7 +60,7 @@ def test_seed_bound_asserted(spark, emb):
     # vec_ids >= 2^42 must refuse the fit loudly, not mis-assign
     bad = emb.withColumn(
         "vec_id", F.col("vec_id") + F.lit(A._IVF_ENC_BASE))
-    with pytest.raises(AssertionError, match="2\\^42"):
+    with pytest.raises(ValueError, match="2\\^42"):
         A._ivf_fit(bad)
 
 

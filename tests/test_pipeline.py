@@ -238,3 +238,27 @@ def test_unsalted_skew_serializes_one_task(spark):
                 .filter(F.col("conv_id") == "conv_00000000")
                 .groupBy("pid").count().collect())
     assert len(per_task) == 1
+
+
+def test_single_query_pipeline_plan_is_one_scan_one_kernel(spark, tmp_path):
+    """The pipeline's single-query call (jvm_prose_fast_path=False) is
+    ONE scan feeding ONE MapInPandas with no Union — one input scan per
+    commit group; a query that cannot extract never reaches Python."""
+    from engine.extract import extract_turns
+
+    df = spark.read.parquet(_mk_input(spark, tmp_path, n_conversations=6,
+                                      turns_per_conv=6))
+
+    def plan(query):
+        return extract_turns(df, query, salt_partitions=8, salt_block=256,
+                             jvm_prose_fast_path=False) \
+            ._jdf.queryExecution().executedPlan().toString()
+
+    good = plan(CANONICAL_QUERY)
+    assert good.count("MapInPandas") == 1
+    assert good.count("FileScan parquet") == 1
+    assert "Union" not in good
+    for bad in ("books", "give me"):
+        bad_plan = plan(bad)
+        assert "MapInPandas" not in bad_plan
+        assert bad_plan.count("FileScan parquet") == 1
