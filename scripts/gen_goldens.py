@@ -4,12 +4,12 @@ Two snapshot sets:
 
 * **Reference snapshots** — engine output over the reference's own
   fixture corpus (``SAMPLES_DIR``, read-only) × FIXTURES.md §2
-  queries.  The reference itself cannot execute in this sandbox (its
-  bs4/flask dependency stack is absent), so per-turn parity is
-  established by (a) kernel-level unit tests against the reference's
-  inline test cases and (b) these committed snapshots, which pin the
-  deterministic configuration's output byte-for-byte against
-  regressions.  ``python scripts/gen_goldens.py --check`` verifies
+  queries.  The reference itself does not run in this project's
+  environment (its bs4/flask dependency stack is absent), so per-turn
+  parity is established by (a) kernel-level unit tests against the
+  reference's inline test cases and (b) these committed snapshots,
+  which pin the deterministic configuration's output byte-for-byte
+  against regressions.  ``python scripts/gen_goldens.py --check`` verifies
   instead of writing.
 * **Self-contained parity snapshots** (``--parity``) — the Spark
   extraction operators (``extract_turns`` with both prose paths,
@@ -33,6 +33,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from engine import parser  # noqa: E402
+from engine.schema import RESULTS_SCHEMA  # noqa: E402
 
 SAMPLES_DIR = "/root/reference/samples"
 _GOLDENS_DIR = os.path.join(os.path.dirname(os.path.dirname(
@@ -121,9 +122,7 @@ MULTI_QUERIES = {"book": BOOK_QUERY, "title": TITLE_QUERY, "the": "the",
 # the multi-query canonical form keeps the leading query_id + the
 # results schema; ts (when the input carries it) is pinned by the
 # single-query cases
-_MULTI_COLS = ["query_id", "conv_id", "turn_idx", "role", "entity",
-               "results", "n_results", "message", "strategy", "status",
-               "error", "text_nbytes"]
+_MULTI_COLS = ["query_id"] + RESULTS_SCHEMA.fieldNames()
 
 
 def _inline_test_html() -> list:
@@ -331,11 +330,7 @@ def parity_main(check: bool) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         if check:
-            with open(PARITY_CORPUS_PATH, encoding="utf-8") as f:
-                corpus = json.load(f)
-            with open(PARITY_GOLDENS_PATH, encoding="utf-8") as f:
-                expected = json.load(f)
-            drift = diff_parity(expected, build_parity(spark, corpus))
+            drift = check_parity(spark)
             for line in drift:
                 print(f"PARITY MISMATCH: {line}")
             if drift:
@@ -350,6 +345,16 @@ def parity_main(check: bool) -> int:
         return 0
     finally:
         spark.stop()
+
+
+def check_parity(spark) -> list:
+    """Rebuild the parity snapshot over the frozen corpus and diff it
+    against the committed one; [] when they match."""
+    with open(PARITY_CORPUS_PATH, encoding="utf-8") as f:
+        corpus = json.load(f)
+    with open(PARITY_GOLDENS_PATH, encoding="utf-8") as f:
+        expected = json.load(f)
+    return diff_parity(expected, build_parity(spark, corpus))
 
 
 def diff_parity(expected: dict, actual: dict) -> list:

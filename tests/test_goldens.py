@@ -17,10 +17,7 @@ import os
 
 import pytest
 
-from scripts.gen_goldens import (
-    GOLDENS_PATH, PARITY_CORPUS_PATH, PARITY_GOLDENS_PATH, SAMPLES_DIR,
-    build, build_parity, diff_parity,
-)
+from scripts.gen_goldens import GOLDENS_PATH, SAMPLES_DIR, build, check_parity
 
 
 @pytest.mark.skipif(not os.path.isdir(SAMPLES_DIR),
@@ -57,8 +54,4 @@ def test_parity_snapshots_match_goldens(spark):
     """extract_turns (both prose paths, with and without ts),
     extract_turns_multi and the per-page envelopes / DOM dumps
     reproduce the committed parity goldens exactly."""
-    with open(PARITY_CORPUS_PATH, encoding="utf-8") as f:
-        corpus = json.load(f)
-    with open(PARITY_GOLDENS_PATH, encoding="utf-8") as f:
-        expected = json.load(f)
-    assert diff_parity(expected, build_parity(spark, corpus)) == []
+    assert check_parity(spark) == []
