@@ -122,7 +122,7 @@ def score_main_content(root: dom.Node
             order[key] = idx
             nodes[key] = node
 
-    for idx, el in enumerate(root.iter_elements(True)):
+    for idx, el in enumerate(root.elements()):
         if el.name not in CANDIDATE_TAGS:
             continue
         if any(p.name in SKIP_TAGS for p in el.parents):

@@ -1,15 +1,15 @@
-"""Lightweight DOM built on stdlib ``html.parser``.
+"""Lightweight DOM with the tree semantics of stdlib ``html.parser``.
 
 The reference parses every page with BeautifulSoup's ``html.parser``
 backend (e.g. ``/root/reference/src/intelligent_parser.py:73``,
 ``general_parser.py:96``, ``table_parser.py:71``,
 ``json_script_parser.py:117``).  bs4 is not a dependency of this
-rebuild; instead we tokenize with the same stdlib tokenizer bs4's
-``html.parser`` backend uses and build a minimal tree that reproduces
-the subset of the bs4 API the extraction kernels need:
+rebuild; instead we build a minimal tree that reproduces the subset of
+the bs4 API the extraction kernels need:
 
 * ``find`` / ``find_all`` with tag-name, ``attrs``, ``class_`` and
   ``recursive`` filters, in document order;
+* ``elements()`` (every descendant element, document order, as a list);
 * ``get_text()`` (concatenation of descendant text, entities decoded);
 * ``unwrap()`` (used for TEXT_PROPERTY_TAGS cleanup,
   ``general_parser.py:98-100``);
@@ -17,11 +17,42 @@ the subset of the bs4 API the extraction kernels need:
   ``general_parser.py:523-531``);
 * ``.string`` for script/JSON payloads (``json_script_parser.py:128``).
 
-Semantics pinned to match the bs4/html.parser behaviour observable in
-the reference's fixtures: tag/attr names lowercased, ``class`` is a
-token list, character references decoded in text but not inside
-script/style, comments dropped, void elements self-close, and stray
-end tags are recovered by popping to the nearest matching open tag.
+Tree policy (``_TreeBuilder``), pinned to the bs4/html.parser behaviour
+observable in the reference's fixtures: tag/attr names lowercased,
+``class`` is a token list, a duplicate attribute keeps its first
+position and its last value, a value-less attribute is ``""``,
+character references decoded in text and attribute values but not
+inside script/style, comments and declarations dropped, void elements
+self-close, and stray end tags are recovered by popping to the nearest
+matching open tag.
+
+Tokenizing.  ``parse_html`` first tries a strict single-pass
+tokenizer that accepts only this grammar (``WS`` is ``[ \\t\\n\\r\\f]``):
+
+* text: a run of characters up to the next ``<``, passed through
+  ``html.unescape`` only when it contains ``&``;
+* start tag: ``<`` name ``[a-zA-Z][-a-zA-Z0-9]*``, then attributes
+  ``WS+ [a-zA-Z_:][-a-zA-Z0-9_:.]*``, each optionally followed by
+  ``WS* = WS*`` and a ``"…"`` value, a ``'…'`` value or a bare
+  ``[A-Za-z0-9_.:#-]+`` value that is followed by whitespace or ``>``;
+  the tag ends in ``WS* >`` or ``WS* />``;
+* end tag: ``</`` name ``WS* >``;
+* comment: ``<!--`` up to the first ``--\\s*>``;
+* ``<!doctype`` (any case) up to the next ``>``;
+* the content of ``HTMLParser.CDATA_CONTENT_ELEMENTS`` (script, style)
+  up to the first ASCII ``</\\s*name\\s*>`` (any case), kept raw.
+
+Inside this grammar ``html.parser`` produces the same tokens, with the
+same text chunk boundaries, and both paths feed the same
+``_TreeBuilder`` handlers.  Any input outside it (a stray ``<``,
+``<?``, ``<![CDATA[``, a raw-text element with no closer, attribute
+syntax outside the subset, non-ASCII whitespace inside a tag, ...)
+sends the **whole page** through ``html.parser`` with a fresh builder,
+so a page is never tokenized by both.  The differential tests
+(``tests/test_properties.py``, ``tests/test_dom_edges.py``) compare the
+strict path against the *installed* ``html.parser``: a Python upgrade
+that changes ``html.parser`` fails those tests loudly instead of
+letting the two paths drift apart.
 
 This module is pure Python and runs *inside* Arrow-batched UDFs — the
 per-row work is vectorized at the batch level per the north star (no
@@ -30,6 +61,8 @@ per-row Python round trips through Spark).
 
 from __future__ import annotations
 
+import re
+from html import unescape
 from html.parser import HTMLParser
 from typing import Dict, Iterator, List, Optional, Union
 
@@ -74,35 +107,24 @@ class Node:
             yield node
             node = node.parent
 
-    def iter_elements(self, recursive: bool = True) -> Iterator["Node"]:
+    def elements(self) -> List["Node"]:
         """Descendant elements in document order (self excluded).
 
-        Iterative DFS — nested generators cost O(depth) per yield and
-        this is the hottest loop in the extraction kernel."""
-        if not recursive:
-            for child in self.children:
-                if isinstance(child, Node):
-                    yield child
-            return
-        stack = [(self.children, 0)]
+        Explicit-stack pre-order walk into a list: this is the hottest
+        loop in the extraction kernel, and a list costs one append per
+        element where a generator costs a resume per element."""
+        out: List[Node] = []
+        append = out.append
+        stack = self.children[::-1]
+        pop, extend = stack.pop, stack.extend
         while stack:
-            children, i = stack[-1]
-            n = len(children)
-            while i < n:
-                child = children[i]
-                i += 1
-                if isinstance(child, Node):
-                    stack[-1] = (children, i)
-                    yield child
-                    if child.children:
-                        stack.append((child.children, 0))
-                    break
-            else:
-                stack.pop()
-
-    @property
-    def descendants(self) -> Iterator["Node"]:
-        return self.iter_elements(True)
+            node = pop()
+            if node.__class__ is str:
+                continue
+            append(node)
+            if node.children:
+                extend(node.children[::-1])
+        return out
 
     # -- text -------------------------------------------------------------
     def get_text(self) -> str:
@@ -150,33 +172,23 @@ class Node:
     def find_all(self, name=None, attrs: Optional[AttrFilter] = None,
                  recursive: bool = True, limit: Optional[int] = None,
                  **kwargs) -> List["Node"]:
-        name_filter = _normalize_name(name)
-        merged = dict(attrs) if attrs else {}
-        for key, val in kwargs.items():
-            if key == "class_":
-                key = "class"
-            merged[key] = val
-        out: List[Node] = []
-        if not merged:
-            # hot path: tag-name-only filter, no attribute matching
-            if not recursive:
-                if name_filter is None:
-                    out = [c for c in self.children if isinstance(c, Node)]
-                else:
-                    out = [c for c in self.children
-                           if isinstance(c, Node) and c.name in name_filter]
-            elif name_filter is None:
-                out = list(self.iter_elements(True))
-            else:
-                out = [el for el in self.iter_elements(True)
-                       if el.name in name_filter]
-            return out[:limit] if limit is not None else out
-        for el in self.iter_elements(recursive):
-            if _matches(el, name_filter, merged):
-                out.append(el)
-                if limit is not None and len(out) >= limit:
-                    break
-        return out
+        if kwargs:
+            attrs = dict(attrs) if attrs else {}
+            for key, val in kwargs.items():
+                attrs["class" if key == "class_" else key] = val
+        if recursive:
+            found = self.elements()
+        else:
+            found = [c for c in self.children if c.__class__ is not str]
+        if isinstance(name, str):
+            found = [el for el in found if el.name == name]
+        elif name is not None and name is not True:
+            names = set(name)
+            found = [el for el in found if el.name in names]
+        if attrs:
+            wanted = attrs.items()
+            found = [el for el in found if _attrs_match(el.attrs, wanted)]
+        return found[:limit] if limit is not None else found
 
     findAll = find_all
 
@@ -189,14 +201,6 @@ class Node:
         return f"<{self.name} {self.attrs}>"
 
 
-def _normalize_name(name):
-    if name is None or name is True:
-        return None
-    if isinstance(name, str):
-        return {name}
-    return set(name)
-
-
 def _attr_value_matches(actual, expected) -> bool:
     if expected is True:
         return actual is not None
@@ -207,18 +211,19 @@ def _attr_value_matches(actual, expected) -> bool:
             return expected in actual or expected == " ".join(actual)
         if isinstance(expected, list):
             # token-subset match: every requested token present
-            return all(tok in actual for tok in expected)
+            for tok in expected:
+                if tok not in actual:
+                    return False
+            return True
         return False
     if isinstance(expected, list):
         return actual in expected
     return actual == expected
 
 
-def _matches(el: Node, name_filter, attrs: AttrFilter) -> bool:
-    if name_filter is not None and el.name not in name_filter:
-        return False
-    for key, expected in attrs.items():
-        if not _attr_value_matches(el.attrs.get(key), expected):
+def _attrs_match(attrs: dict, wanted) -> bool:
+    for key, expected in wanted:
+        if not _attr_value_matches(attrs.get(key), expected):
             return False
     return True
 
@@ -231,7 +236,7 @@ class _TreeBuilder(HTMLParser):
         self.root = Node("[document]")
         self.stack: List[Node] = [self.root]
 
-    # html.parser lowercases tag names already
+    # both tokenizers pass lowercased tag names
     def handle_starttag(self, tag: str, attrs) -> None:
         node = self._make_node(tag, attrs)
         self.stack[-1].children.append(node)
@@ -280,8 +285,87 @@ class _TreeBuilder(HTMLParser):
         pass
 
 
-def parse_html(html: str) -> Node:
-    """Parse an HTML string into a :class:`Node` tree (the document root)."""
+# -- strict tokenizer (grammar in the module docstring) ---------------------
+
+_WS = r"[ \t\n\r\f]"
+_ATTR_NAME = r"[a-zA-Z_:][-a-zA-Z0-9_:.]*"
+# a bare value must end where html.parser's ``[^>\s]*`` ends
+_ATTR_VALUE = (r"\"[^\"]*\"|'[^']*'|[A-Za-z0-9_.:#-]+(?=[ \t\n\r\f>])")
+# one token per match; the last participating group tells which:
+# 1 text, 4 start tag (2 name, 3 attribute source, 4 "/" or ""),
+# 5 end tag, 6 comment body, 7 doctype body
+_TOKEN_RE = re.compile(
+    r"([^<]+)"
+    r"|<([a-zA-Z][-a-zA-Z0-9]*)"
+    rf"((?:{_WS}+{_ATTR_NAME}(?:{_WS}*={_WS}*(?:{_ATTR_VALUE}))?)*)"
+    rf"{_WS}*(/?)>"
+    rf"|</([a-zA-Z][-a-zA-Z0-9]*){_WS}*>"
+    r"|<!--(.*?)--\s*>"
+    r"|<!([dD][oO][cC][tT][yY][pP][eE][^>]*)>",
+    re.S)
+# splits an attribute source the token pattern has already accepted
+_ATTR_RE = re.compile(
+    rf"{_WS}+({_ATTR_NAME})(?:{_WS}*={_WS}*"
+    r"(?:\"([^\"]*)\"|'([^']*)'|([A-Za-z0-9_.:#-]+)))?")
+_RAW_TEXT_END = {name: re.compile(r"</\s*%s\s*>" % name, re.I)
+                 for name in HTMLParser.CDATA_CONTENT_ELEMENTS}
+
+
+def _parse_strict(html: str) -> Optional[Node]:
+    """Tree of ``html`` from the strict tokenizer, or ``None`` when the
+    page leaves its grammar (the caller then uses ``html.parser``)."""
+    builder = _TreeBuilder()
+    on_data, on_start = builder.handle_data, builder.handle_starttag
+    on_startend, on_end = builder.handle_startendtag, builder.handle_endtag
+    match, split_attrs = _TOKEN_RE.match, _ATTR_RE.findall
+    # attribute sources repeat across a page's repeated items; the
+    # builder copies each list into a fresh dict, so sharing is safe
+    attr_lists: Dict[str, list] = {}
+    pos, n = 0, len(html)
+    while pos < n:
+        m = match(html, pos)
+        if m is None:
+            return None
+        pos = m.end()
+        kind = m.lastindex
+        if kind == 1:
+            text = m.group(1)
+            on_data(unescape(text) if "&" in text else text)
+        elif kind == 4:
+            tag, source, slash = m.group(2, 3, 4)
+            tag = tag.lower()
+            attrs = attr_lists.get(source)
+            if attrs is None:
+                attrs = attr_lists[source] = []
+                for key, dq, sq, bare in split_attrs(source):
+                    value = dq or sq or bare
+                    if "&" in value:
+                        value = unescape(value)
+                    attrs.append((key.lower(), value))
+            if slash:
+                on_startend(tag, attrs)
+                continue
+            on_start(tag, attrs)
+            closer = _RAW_TEXT_END.get(tag)
+            if closer is not None:
+                # raw text: html.parser emits it unconverted, one chunk
+                end = closer.search(html, pos)
+                if end is None or not end.group().isascii():
+                    return None
+                on_data(html[pos:end.start()])
+                on_end(tag)
+                pos = end.end()
+        elif kind == 5:
+            on_end(m.group(5).lower())
+        elif kind == 6:
+            builder.handle_comment(m.group(6))
+        else:
+            builder.handle_decl(m.group(7))
+    return builder.root
+
+
+def _parse_htmlparser(html: str) -> Node:
+    """Tree of ``html`` from the stdlib ``html.parser`` tokenizer."""
     builder = _TreeBuilder()
     try:
         builder.feed(html)
@@ -292,3 +376,10 @@ def parse_html(html: str) -> Node:
         # at the pipeline level, engine/pipeline.py).
         pass
     return builder.root
+
+
+def parse_html(html: str) -> Node:
+    """Parse an HTML string into a :class:`Node` tree (the document root):
+    strict tokenizer first, ``html.parser`` for pages outside its grammar."""
+    root = _parse_strict(html) if isinstance(html, str) else None
+    return root if root is not None else _parse_htmlparser(html)

@@ -42,6 +42,7 @@ unreachable tail after ``return`` (``:117-121``).
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
@@ -67,6 +68,18 @@ class TagIdentifier:
 
     tag_name: str
     attributes: Dict[str, object] = field(default_factory=dict)
+    # G6 replay matches on the attributes minus the value-bearing keys;
+    # computed once per step, not once per step per sibling container
+    _match_attrs: Optional[Dict[str, object]] = field(
+        default=None, init=False, repr=False, compare=False)
+
+    @property
+    def match_attrs(self) -> Dict[str, object]:
+        if self._match_attrs is None:
+            self._match_attrs = {
+                k: v for k, v in self.attributes.items()
+                if k not in C.ATTRIBUTES_MAY_CONTAIN_VALUES}
+        return self._match_attrs
 
     @staticmethod
     def from_element(el: Node, first_class_only: bool = False) -> "TagIdentifier":
@@ -102,6 +115,18 @@ def get_element_text(element: Optional[Node]) -> Optional[str]:
     if len(text) < 1 or not _ALNUM_RE.search(text):
         return None
     return text
+
+
+@functools.lru_cache(maxsize=1024)
+def _keyword_kind(attribute: str) -> Optional[str]:
+    """G7 keyword family of a requested attribute: ``"image"`` (image
+    keywords win), ``"link"`` or ``None`` (text strategies)."""
+    attr_lower = attribute.lower()
+    if any(kw in attr_lower for kw in C.IMAGE_KEYWORDS):
+        return "image"
+    if any(kw in attr_lower for kw in C.LINK_KEYWORDS):
+        return "link"
+    return None
 
 
 def unwrap_text_property_tags(root: Node) -> None:
@@ -199,23 +224,12 @@ def find_attribute_value(container: Node, attribute: str,
     """G7 ladder (ref :460-512).  The similarity tier (G8) runs only
     when a matcher is plugged in; with ``matcher=None`` this is the
     reference's deterministic degraded configuration."""
-    attr_lower = attribute.lower()
-    is_image_or_link = False
-
-    if any(kw in attr_lower for kw in C.IMAGE_KEYWORDS):
-        is_image_or_link = True
-        value = find_image_url(container, attribute)
-        if value:
-            return value
-
-    if not is_image_or_link and any(kw in attr_lower for kw in C.LINK_KEYWORDS):
-        is_image_or_link = True
-        value = find_url(container, attribute)
-        if value:
-            return value
-
-    if is_image_or_link:
-        return None
+    # an image/link miss returns None without the text strategies
+    kind = _keyword_kind(attribute)
+    if kind == "image":
+        return find_image_url(container, attribute)
+    if kind == "link":
+        return find_url(container, attribute)
 
     exact = find_by_exact_match(container, attribute)
     if exact:
@@ -387,8 +401,7 @@ def find_value_using_path_chain(attribute: str, container: Node,
     for tag_id in path_chain:
         if current is None:
             return None
-        match_attrs = {k: v for k, v in tag_id.attributes.items()
-                       if k not in C.ATTRIBUTES_MAY_CONTAIN_VALUES}
+        match_attrs = tag_id.match_attrs
 
         if tag_id.tag_name == "img":
             img_tags = current.find_all("img")
@@ -415,8 +428,8 @@ def find_value_using_path_chain(attribute: str, container: Node,
     if current is None:
         return None
 
-    attr_lower = attribute.lower()
-    if any(kw in attr_lower for kw in C.IMAGE_KEYWORDS):
+    kind = _keyword_kind(attribute)
+    if kind == "image":
         src = current.get("src")
         if src:
             return AttributeData(value=src, path_chain=path_chain)
@@ -425,7 +438,7 @@ def find_value_using_path_chain(attribute: str, container: Node,
             return AttributeData(value=srcset, path_chain=path_chain)
         return None
 
-    if any(kw in attr_lower for kw in C.LINK_KEYWORDS):
+    if kind == "link":
         href = current.get("href")
         if href:
             return AttributeData(value=href, path_chain=path_chain)

@@ -8,7 +8,8 @@ Replicates the deterministic surface of
 * J2 flatten to dot-notation keys with ``[i]`` array indices (``:160-194``);
 * J3 recursive common-prefix strip at the 50% threshold (``:196-264``
   — the comment says 70%, the code uses 0.5; the code wins);
-* J4 six regex patterns grouped by array index (``:319-423``), including
+* J4 six regex patterns (folded into two) grouped by array index
+  (``:319-423``), including
   the naive ``+'s'`` pluralization quirk at ``:346``;
 * J7 dedup by sorted attr-value signature (``:565-585``);
 * J8 sufficiency gate ≥ 2/3 requested attrs
@@ -24,6 +25,7 @@ Pure Python: runs inside the Arrow-batched extraction UDF.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from typing import Any, Dict, List, Optional
@@ -39,7 +41,7 @@ def find_json_scripts(root: Node) -> List[Node]:
     ld_json: List[Node] = []
     app_json: List[Node] = []
     next_data: List[Node] = []
-    for el in root.iter_elements(recursive=True):
+    for el in root.elements():
         if el.name != "script":
             continue
         stype = el.attrs.get("type")
@@ -63,25 +65,31 @@ def has_json_scripts(root: Node) -> bool:
 
 
 def flatten_json(data: Any, parent_key: str = "", separator: str = ".") -> Dict[str, Any]:
-    """J2 — dicts → ``a.b.c``; lists → ``k[i]``; scalars kept."""
-    items: List[tuple] = []
+    """J2 — dicts → ``a.b.c``; lists → ``k[i]``; scalars kept.  A key
+    produced twice keeps its first position and its last value."""
+    flat: Dict[str, Any] = {}
+    _flatten_into(flat, data, parent_key, separator)
+    return flat
+
+
+def _flatten_into(flat: Dict[str, Any], data: Any, parent_key: str,
+                  separator: str) -> None:
     if isinstance(data, dict):
         for key, value in data.items():
             new_key = f"{parent_key}{separator}{key}" if parent_key else key
             if isinstance(value, (dict, list)):
-                items.extend(flatten_json(value, new_key, separator).items())
+                _flatten_into(flat, value, new_key, separator)
             else:
-                items.append((new_key, value))
+                flat[new_key] = value
     elif isinstance(data, list):
         for i, value in enumerate(data):
             new_key = f"{parent_key}[{i}]" if parent_key else f"[{i}]"
             if isinstance(value, (dict, list)):
-                items.extend(flatten_json(value, new_key, separator).items())
+                _flatten_into(flat, value, new_key, separator)
             else:
-                items.append((new_key, value))
+                flat[new_key] = value
     else:
-        items.append((parent_key, data))
-    return dict(items)
+        flat[parent_key] = data
 
 
 def clean_flattened_json(flattened: Dict[str, Any]) -> Dict[str, Any]:
@@ -92,24 +100,28 @@ def clean_flattened_json(flattened: Dict[str, Any]) -> Dict[str, Any]:
     if len(keys) <= 1:
         return flattened
 
+    # every proper dotted prefix of every key: the key up to each "."
+    # (the same strings and order as joining split(".")[:i])
     prefix_counts: Dict[str, int] = {}
     for key in keys:
-        parts = key.split(".")
-        for i in range(1, len(parts)):
-            prefix = ".".join(parts[:i])
+        dot = key.find(".")
+        while dot >= 0:
+            prefix = key[:dot]
             prefix_counts[prefix] = prefix_counts.get(prefix, 0) + 1
+            dot = key.find(".", dot + 1)
     if not prefix_counts:
         return flattened
 
+    # a prefix's count is exactly the number of keys starting with
+    # prefix + "." — the reference recounts those keys before accepting
+    # a prefix, which can never change the outcome
     threshold = len(keys) * 0.5
     most_common_prefix = None
     max_count = 0
     for prefix, count in prefix_counts.items():
         if count >= threshold and count > max_count:
-            matching = [k for k in keys if k.startswith(prefix + ".")]
-            if len(matching) >= threshold:
-                most_common_prefix = prefix
-                max_count = count
+            most_common_prefix = prefix
+            max_count = count
 
     if most_common_prefix:
         cleaned: Dict[str, Any] = {}
@@ -125,29 +137,36 @@ def clean_flattened_json(flattened: Dict[str, Any]) -> Dict[str, Any]:
     return flattened
 
 
+@functools.lru_cache(maxsize=1024)
+def _key_patterns(entity: str, attr: str):
+    """J4's six key patterns folded into two, compiled once per
+    (entity, attr).  ``single`` is p1|p2 (``a``, ``e.a``); ``indexed``
+    is p3-p6 (``e[i].a``, ``e_plural[i].a`` and both with a leading
+    ``.`` — p5/p6 start with an escaped dot but run under ``re.match``,
+    so only keys that begin with a dot can hit them).  At most one of
+    p3-p6 matches a key (they coincide when ``entity`` already ends in
+    ``s``), so the fold sets exactly the same values."""
+    # naive plural quirk (ref json_script_parser.py:346)
+    entity_plural = entity + "s" if not entity.endswith("s") else entity
+    e, ep, a = re.escape(entity), re.escape(entity_plural), re.escape(attr)
+    single = re.compile(rf"^(?:{e}\.)?{a}$", re.IGNORECASE)
+    indexed = re.compile(rf"^\.?(?:{e}|{ep})\[(\d+)\]\.{a}$", re.IGNORECASE)
+    return single.match, indexed.match
+
+
 def extract_using_regex(flattened: Dict[str, Any], entity: Optional[str],
                         attributes: List[str]) -> List[Dict[str, str]]:
     """J4 — the six key patterns, grouped by array index ('single' else)."""
     entity = entity or ""
     entity_instances: Dict[str, Dict[str, str]] = {}
-    # naive plural quirk (ref json_script_parser.py:346)
-    entity_plural = entity + "s" if not entity.endswith("s") else entity
-
     for attr in attributes:
-        p1 = re.compile(rf"^{re.escape(attr)}$", re.IGNORECASE)
-        p2 = re.compile(rf"^{re.escape(entity)}\.{re.escape(attr)}$", re.IGNORECASE)
-        p3 = re.compile(rf"^{re.escape(entity)}\[(\d+)\]\.{re.escape(attr)}$", re.IGNORECASE)
-        p4 = re.compile(rf"^{re.escape(entity_plural)}\[(\d+)\]\.{re.escape(attr)}$", re.IGNORECASE)
-        p5 = re.compile(rf"\.{re.escape(entity)}\[(\d+)\]\.{re.escape(attr)}$", re.IGNORECASE)
-        p6 = re.compile(rf"\.{re.escape(entity_plural)}\[(\d+)\]\.{re.escape(attr)}$", re.IGNORECASE)
-
+        single, indexed = _key_patterns(entity, attr)
         for key, value in flattened.items():
-            if p1.match(key) or p2.match(key):
+            if single(key):
                 entity_instances.setdefault("single", {})[attr] = str(value)
-            for pat in (p3, p4, p5, p6):
-                m = pat.match(key)
-                if m:
-                    entity_instances.setdefault(m.group(1), {})[attr] = str(value)
+            m = indexed(key)
+            if m:
+                entity_instances.setdefault(m.group(1), {})[attr] = str(value)
 
     return [attrs for attrs in entity_instances.values() if attrs]
 

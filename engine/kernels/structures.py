@@ -40,7 +40,7 @@ def find_repeated_structures(root: Node) -> List[List[Node]]:
     is stable and ties break on it."""
     by_tag: Dict[str, List[Node]] = {t: [] for t in _GROUPED_TAGS}
     lists: List[Node] = []
-    for el in root.iter_elements(recursive=True):
+    for el in root.elements():
         if el.name in by_tag and "class" in el.attrs:
             by_tag[el.name].append(el)
         elif el.name in ("ul", "ol"):
@@ -89,7 +89,7 @@ def find_likely_entity_containers(root: Node, num_attributes: int = 2) -> List[N
     counts: dict = {}
     _descendant_counts(root, counts)
     likely: List[Node] = []
-    for el in root.iter_elements(recursive=True):
+    for el in root.elements():
         if el.name in _SKIP_TAGS:
             continue
         if counts[id(el)] >= num_attributes:

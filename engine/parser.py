@@ -67,13 +67,8 @@ def extract_turn(text: str, parsed: ParsedQuery,
                               "Could not extract entity and attributes from query",
                               "none", "bad_query")
 
-    try:
-        root = dom.parse_html(text)
-    except Exception as exc:  # pragma: no cover — parse_html swallows
-        return TurnExtraction(entity, [], 0, f"Parsing error: {exc}",
-                              "none", "parse_error", str(exc))
-
-    return extract_from_root(root, parsed, similarity_threshold, matcher)
+    return extract_from_root(dom.parse_html(text), parsed,
+                             similarity_threshold, matcher)
 
 
 def extract_from_root(root, parsed: ParsedQuery,

@@ -38,6 +38,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import List, Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -367,7 +368,10 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
                     int(r.parse_failures) if r else 0,
                     wall_ms, cfg.run_id, qid,
                 ))
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA) \
+        # from pandas, Arrow hands the rows to the JVM directly; a list
+        # of tuples would round-trip through a Python worker
+        lineage_pdf = pd.DataFrame(lineage_rows, columns=LINEAGE_SCHEMA.names)
+        spark.createDataFrame(lineage_pdf, LINEAGE_SCHEMA) \
             .coalesce(1).write.mode("append").parquet(cfg.lineage_path)
         buckets_processed += len(group)
 

@@ -264,6 +264,13 @@ def _dom_dump(node):
              for c in node.children]]
 
 
+def dom_dump(root) -> str:
+    """A tree as compact JSON: element names, attributes in insertion
+    order and every text chunk — equal dumps mean identical trees."""
+    return json.dumps(_dom_dump(root), ensure_ascii=False,
+                      separators=(",", ":"))
+
+
 def build_parity(spark, corpus: list) -> dict:
     """Canonical operator outputs over ``corpus``.  Each case names the
     digest of its sorted rows; ``rows`` holds every distinct row set
@@ -309,8 +316,7 @@ def build_parity(spark, corpus: list) -> dict:
             texts.append(r["text"])
     for text in texts:
         out["pages"].append({
-            "dom": json.dumps(_dom_dump(dom.parse_html(text)),
-                              ensure_ascii=False, separators=(",", ":")),
+            "dom": dom_dump(dom.parse_html(text)),
             "envelopes": {qid: asdict(parser.extract_turn(text, p))
                           for qid, p in sorted(parsed.items())}})
     return out

@@ -1,7 +1,11 @@
 """Single-core kernel microbenchmark — isolates pure extraction cost
 from Spark overheads for regression tracking across rounds.
 
-Run: python scripts/kernel_bench.py  → one JSON line.
+Run: python scripts/kernel_bench.py  → one JSON line.  Besides the
+turns/s figures it splits each markup family (general / table / json,
+400 pages each, min of 5 passes) into DOM-parse µs and strategy-ladder
+µs per page, and reports the share of pages the strict tokenizer
+accepts (the rest fall back to html.parser).
 """
 
 from __future__ import annotations
@@ -13,7 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from engine.parser import extract_turn  # noqa: E402
+from engine import dom  # noqa: E402
+from engine.parser import extract_from_root, extract_turn  # noqa: E402
 from engine.query_parse import parse_query_hybrid  # noqa: E402
 
 
@@ -42,6 +47,31 @@ def _families():
                 f'{{"book": [{items}]}}</script></head><body><p>x</p></body></html>')
 
     return gen, tab, js
+
+
+def _family_split(parsed, per_family: int = 400, passes: int = 5) -> dict:
+    """Per-family parse and ladder µs per page (min over passes) and
+    the strict tokenizer's share of all pages."""
+    out: dict = {"parse_us": {}, "ladder_us": {}}
+    strict = total = 0
+    for name, make in zip(("general", "table", "json"), _families()):
+        texts = [make(d, 1) for d in range(per_family)]
+        strict += sum(dom._parse_strict(t) is not None for t in texts)
+        total += len(texts)
+        best_parse = best_ladder = float("inf")
+        for _ in range(passes):
+            t0 = time.perf_counter()
+            roots = [dom.parse_html(t) for t in texts]
+            t1 = time.perf_counter()
+            for root in roots:
+                extract_from_root(root, parsed)
+            t2 = time.perf_counter()
+            best_parse = min(best_parse, (t1 - t0) / len(texts) * 1e6)
+            best_ladder = min(best_ladder, (t2 - t1) / len(texts) * 1e6)
+        out["parse_us"][name] = round(best_parse, 1)
+        out["ladder_us"][name] = round(best_ladder, 1)
+    out["strict_tokenizer_share"] = round(strict / total, 4)
+    return out
 
 
 def main() -> int:
@@ -94,6 +124,8 @@ def main() -> int:
             extract_pdf_text(pdf)
         best_pdf = max(best_pdf, 2000 / (time.time() - t0))
 
+    split = _family_split(parsed)
+
     print(json.dumps({
         "small_turns_per_sec_1core": round(best_small, 1),
         "big_page_ms": round(best_big, 2),
@@ -102,6 +134,10 @@ def main() -> int:
         "boilerplate_small_per_sec_1core": round(best_bp, 1),
         "boilerplate_big_page_ms": round(bp_big, 2),
         "pdf_docs_per_sec_1core": round(best_pdf, 1),
+        "family_parse_us_1core": split["parse_us"],
+        "family_ladder_us_1core": split["ladder_us"],
+        "strict_tokenizer_share": split["strict_tokenizer_share"],
+        "big_page_strict_tokenizer": dom._parse_strict(big) is not None,
     }))
     return 0
 

@@ -2,8 +2,12 @@
 differ from browser/html5lib behavior — we pin the html.parser-family
 behavior the reference observes through bs4."""
 
+import random
+
+from engine import dom
 from engine.dom import parse_html
 from engine.kernels import general, table
+from scripts.gen_goldens import _random_markup, dom_dump
 
 
 def test_unclosed_li_nests_like_htmlparser():
@@ -83,3 +87,106 @@ def test_input_value_extraction():
 def test_entity_edge_cases_in_text():
     root = parse_html("<p>&pound;51.77 &amp;&nbsp;&#163;5</p>")
     assert root.find("p").get_text() == "£51.77 &\xa0£5"
+
+
+# --- strict tokenizer vs the installed html.parser ------------------------
+
+_MUTATION_BITS = [
+    "<", ">", "/", "=", '"', "'", "&", "&amp", "&#", ";", " ", "\t", "\n",
+    "\r", "\x0b", "\xa0", "\x00", "<!--", "-->", "--!>", "<!", "<?", "</",
+    "/>", "<b", "<SCRIPT>", "</script>", "</ script >", "<style>",
+    "</STYLE >", "<!DOCTYPE html>", "<![CDATA[x]]>", "a", "Z", "-", ":",
+    "_", ".", "#", "`", "\u017f", "é", "<a b=c>", "<a b='c'", "x=y",
+    "<p/ >", "<br/>"]
+
+
+def _mutate(rng, page):
+    """One to four random edits: insert a markup-significant fragment,
+    delete a short run, swap the case of a run, or truncate."""
+    for _ in range(rng.randint(1, 4)):
+        r = rng.random()
+        i = rng.randint(0, len(page))
+        if r < 0.45:
+            page = page[:i] + rng.choice(_MUTATION_BITS) + page[i:]
+        elif r < 0.7:
+            page = page[:i] + page[i + rng.randint(1, 6):]
+        elif r < 0.85:
+            j = min(len(page), i + rng.randint(1, 20))
+            page = page[:i] + page[i:j].swapcase() + page[j:]
+        else:
+            page = page[:i]
+    return page
+
+
+def test_strict_tokenizer_matches_htmlparser_on_mutated_pages():
+    """Fixed-seed mutation fuzz over the parity corpus's tag-soup
+    generator: wherever the strict tokenizer accepts a page, its tree
+    (names, attributes in insertion order, text chunks) is the one the
+    installed html.parser builds."""
+    rng = random.Random(5)
+    fast = 0
+    for _ in range(4000):
+        page = _mutate(rng, _random_markup(rng))
+        strict = dom._parse_strict(page)
+        if strict is None:
+            continue
+        fast += 1
+        assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(page)), page
+    # the fuzz must exercise the strict path, not only its declines
+    assert fast > 1000
+
+
+def test_unmutated_random_markup_takes_the_strict_path():
+    rng = random.Random(6)
+    for _ in range(300):
+        page = _random_markup(rng)
+        strict = dom._parse_strict(page)
+        assert strict is not None, page
+        assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(page))
+
+
+def test_strict_tokenizer_edge_pages_match_htmlparser():
+    for page in ["<!-- a --\x0b> b --><p>c</p>", "<!--->x-->y",
+                 "<!DOCTYPE>t", "<p>tail &x", "<p>&#1;&nbsp;&amp</p>",
+                 "<SCRIPT type=x>a</Script\x0c><p>", "<style></style >",
+                 "<a b = 'c' d=e-f:g.h#i>x</a\n>", "<br/><br /><p/>",
+                 '<p class="a" class="b" x=\'&lt;\'>', "a > b"]:
+        strict = dom._parse_strict(page)
+        assert strict is not None, page
+        assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(page))
+
+
+def test_strict_tokenizer_declines_outside_its_grammar():
+    for page in ["a < b", "x<", "<?xml version='1.0'?><p>x</p>",
+                 "<![CDATA[x]]>", "<script>no closer", "<a b=c/>",
+                 '<a href="x"title="y">', "<div\x0bclass='a'>",
+                 "<!-- unclosed", "</ div>", "<o:p>x</o:p>",
+                 "<script>x</\u017fcript></script>"]:
+        assert dom._parse_strict(page) is None, page
+        # parse_html still builds html.parser's tree for them
+        assert dom_dump(parse_html(page)) == dom_dump(
+            dom._parse_htmlparser(page))
+
+
+def test_synth_family_pages_take_the_strict_path(spark):
+    """Guard against a silent fallback: every page the engine's own
+    generators emit (all three families, several sizes, with and
+    without filler) is tokenized by the strict path."""
+    from pyspark.sql import functions as F
+
+    from engine.synth import html_family_exprs, synth_transcripts
+
+    pages = [r.text for r in synth_transcripts(spark, 6, 8).collect()
+             if r.text.startswith("<")]
+    exprs = [F.expr(e)
+             for n_items in (1, 5, 24)
+             for extra in ("''", "'filler prose & more'")
+             for e in html_family_exprs("concat('Book ', i)",
+                                        "cast(100 + i * 7 as string)",
+                                        n_items, extra).values()]
+    pages.extend(spark.range(1).select(*exprs).collect()[0])
+    assert len(pages) > 20
+    for page in pages:
+        strict = dom._parse_strict(page)
+        assert strict is not None, page
+        assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(page))

@@ -33,6 +33,8 @@ def test_regex_patterns():
         "books[1].name": "idx1-plural",      # naive +'s' plural
         "data.book[2].name": "nested",
         "data.books[3].name": "nested-plural",
+        ".book[4].name": "lead-dot",          # only pattern 5 matches
+        ".books[5].name": "lead-dot-plural",  # only pattern 6 matches
     }
     results = jsonld.extract_using_regex(flat, "book", ["name"])
     values = {r["name"] for r in results}
@@ -41,9 +43,21 @@ def test_regex_patterns():
     assert "idx0" in values and "idx1-plural" in values
     # quirk carried verbatim: patterns 5/6 are anchored with a leading
     # \. but applied via re.match (ref json_script_parser.py:403-415),
-    # so nested keys can never match — they are dead in the reference
+    # so nested keys can never match — only keys that begin with a dot
     assert "nested" not in values and "nested-plural" not in values
-    assert len(results) == 3  # single + 2 indices
+    assert "lead-dot" in values and "lead-dot-plural" in values
+    assert results == [{"name": "dotted"}, {"name": "idx0"},
+                       {"name": "idx1-plural"}, {"name": "lead-dot"},
+                       {"name": "lead-dot-plural"}]
+
+
+def test_regex_patterns_entity_already_plural():
+    # an entity ending in "s" is its own plural: patterns 3/4 (and 5/6)
+    # coincide, and "+s" is not applied a second time
+    flat = {"news[0].title": "n0", ".news[2].title": "n2",
+            "newss[1].title": "double-s"}
+    results = jsonld.extract_using_regex(flat, "news", ["title"])
+    assert results == [{"title": "n0"}, {"title": "n2"}]
 
 
 def test_values_stringified():

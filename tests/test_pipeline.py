@@ -1,12 +1,19 @@
 """Pipeline tests: lineage, exact resume after simulated failure, skew
 salting (SURVEY.md §5.2.4/§5.2.5)."""
 
+import glob
+import json
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from engine.pipeline import (JobConfig, SimulatedFailure, SnapshotMismatch,
                              run_extraction_job)
+from engine.schema import LINEAGE_SCHEMA
 from engine.synth import CANONICAL_QUERY, synth_transcripts
 
 
@@ -37,6 +44,14 @@ def test_full_run_and_lineage(spark, tmp_path):
     assert {r.bucket for r in rows} == set(range(8))
     assert sum(r.rows_in for r in rows) == 72
     assert sum(r.parse_failures for r in rows) == 0
+    # the files carry LINEAGE_SCHEMA exactly, nullability included (a
+    # parquet read reports every column nullable, so ask the footer)
+    files = glob.glob(os.path.join(cfg.lineage_path, "*.parquet"))
+    assert files
+    for f in files:
+        meta = pq.read_schema(f).metadata[
+            b"org.apache.spark.sql.parquet.row.metadata"]
+        assert StructType.fromJson(json.loads(meta)) == LINEAGE_SCHEMA
     # turn_seq window restored order
     assert out.filter(F.col("turn_seq") != F.col("turn_idx") + 1).count() == 0
 

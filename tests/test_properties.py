@@ -8,11 +8,12 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from engine import nouns
+from engine import dom, nouns
 from engine.dom import parse_html
 from engine.kernels import jsonld, table
 from engine.parser import extract_turn
 from engine.query_parse import clean_query, parse_query
+from scripts.gen_goldens import dom_dump
 
 settings.register_profile("ci", max_examples=60, deadline=None)
 settings.load_profile("ci")
@@ -31,6 +32,54 @@ def test_plain_text_roundtrip(s):
     # text without markup/entities survives parsing as text content
     root = parse_html(s)
     assert root.get_text() == s
+
+
+# markup drawn from inside and just outside the strict tokenizer's
+# grammar: upper-case names, every quoting style, entities (a trailing
+# "&x" included), comments, doctype, "/>", script/style with and without
+# closers, stray "<" and ">"
+_TAG_NAMES = st.sampled_from(["div", "p", "a", "li", "br", "img", "DIV",
+                              "Span", "x-y", "h2", "td", "script",
+                              "style"])
+_ATTR_NAMES = st.sampled_from(["class", "id", "href", "CLASS", "data-x",
+                               "disabled", "src", ":on", "a_b", "x.y"])
+_ATTR_TEXT = st.text(alphabet="ab &;<>'\"=/#.-x\t", max_size=6)
+_WS_TEXT = st.sampled_from(["", " ", "  ", "\n", "\t", "\x0b"])
+_attribute = st.one_of(
+    _ATTR_NAMES.map(lambda n: " " + n),
+    st.tuples(_ATTR_NAMES, _WS_TEXT, _ATTR_TEXT).map(
+        lambda t: f' {t[0]}{t[1]}="{t[2].replace(chr(34), "")}"'),
+    st.tuples(_ATTR_NAMES, _ATTR_TEXT).map(
+        lambda t: f" {t[0]}='{t[1].replace(chr(39), '')}'"),
+    st.tuples(_ATTR_NAMES, _ATTR_TEXT).map(lambda t: f" {t[0]}={t[1]}"))
+_start_tag = st.tuples(_TAG_NAMES, st.lists(_attribute, max_size=3),
+                       _WS_TEXT, st.sampled_from([">", "/>"])).map(
+    lambda t: f"<{t[0]}{''.join(t[1])}{t[2]}{t[3]}")
+_end_tag = st.tuples(_TAG_NAMES, _WS_TEXT).map(lambda t: f"</{t[0]}{t[1]}>")
+_markup_text = st.one_of(
+    st.text(alphabet="ab £\n>", min_size=1, max_size=8),
+    st.sampled_from(["&amp;", "&lt;b&gt;", "&#65;", "&#x42;", "&nbsp;",
+                     "&pound", "&x", "AT&T", "&#1;"]))
+_markup_token = st.one_of(
+    _start_tag, _end_tag, _markup_text,
+    st.sampled_from(["<!-- c -->", "<!--x--  >", "<!--x--\x0b>", "<!---->",
+                     "<!DOCTYPE html>", "<!doctype>",
+                     "<script>if (a < b) x('</p>')</script>",
+                     "<SCRIPT type=x>y</script >", "<style>p > a {}</STYLE>",
+                     "<script>", "<style>", "</script>", "<", ">", "</",
+                     "<?pi?>", "<![CDATA[x]]>", "<!x>"]))
+_markup = st.lists(_markup_token, max_size=25).map("".join)
+
+
+@settings(max_examples=400)
+@given(_markup)
+def test_strict_tokenizer_declines_or_matches_htmlparser(html):
+    # the strict path either declines the page or builds the installed
+    # html.parser's tree: names, attributes in insertion order, text
+    # chunks
+    strict = dom._parse_strict(html)
+    if strict is not None:
+        assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(html))
 
 
 @given(st.text(max_size=300))
