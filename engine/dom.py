@@ -46,9 +46,15 @@ Inside this grammar ``html.parser`` produces the same tokens, with the
 same text chunk boundaries, and both paths feed the same
 ``_TreeBuilder`` handlers.  Any input outside it (a stray ``<``,
 ``<?``, ``<![CDATA[``, a raw-text element with no closer, attribute
-syntax outside the subset, non-ASCII whitespace inside a tag, ...)
-sends the **whole page** through ``html.parser`` with a fresh builder,
-so a page is never tokenized by both.  The differential tests
+syntax outside the subset such as ``href=/x`` or ``width=50%``,
+non-ASCII whitespace inside a tag, ...) sends the **whole page**
+through ``html.parser`` with a fresh builder.  One possessive pattern
+over the whole page (``_PAGE_RE``) makes that decision before any tree
+is built, so a declined page costs one C-level scan on top of its
+``html.parser`` parse rather than a discarded partial tree.  (The token
+loop keeps its own checks; only it declines a raw-text closer with
+non-ASCII characters.)  ``scripts/kernel_bench.py`` reports the cost on
+declined pages next to the accepted families.  The differential tests
 (``tests/test_properties.py``, ``tests/test_dom_edges.py``) compare the
 strict path against the *installed* ``html.parser``: a Python upgrade
 that changes ``html.parser`` fails those tests loudly instead of
@@ -211,10 +217,7 @@ def _attr_value_matches(actual, expected) -> bool:
             return expected in actual or expected == " ".join(actual)
         if isinstance(expected, list):
             # token-subset match: every requested token present
-            for tok in expected:
-                if tok not in actual:
-                    return False
-            return True
+            return all(tok in actual for tok in expected)
         return False
     if isinstance(expected, list):
         return actual in expected
@@ -288,20 +291,21 @@ class _TreeBuilder(HTMLParser):
 # -- strict tokenizer (grammar in the module docstring) ---------------------
 
 _WS = r"[ \t\n\r\f]"
+_TAG_NAME = r"[a-zA-Z][-a-zA-Z0-9]*"
 _ATTR_NAME = r"[a-zA-Z_:][-a-zA-Z0-9_:.]*"
 # a bare value must end where html.parser's ``[^>\s]*`` ends
 _ATTR_VALUE = (r"\"[^\"]*\"|'[^']*'|[A-Za-z0-9_.:#-]+(?=[ \t\n\r\f>])")
+_ATTRS = rf"(?:{_WS}+{_ATTR_NAME}(?:{_WS}*={_WS}*(?:{_ATTR_VALUE}))?)*"
+_COMMENT = r"<!--(.*?)--\s*>"
+_DOCTYPE = r"<!([dD][oO][cC][tT][yY][pP][eE][^>]*)>"
 # one token per match; the last participating group tells which:
 # 1 text, 4 start tag (2 name, 3 attribute source, 4 "/" or ""),
 # 5 end tag, 6 comment body, 7 doctype body
 _TOKEN_RE = re.compile(
     r"([^<]+)"
-    r"|<([a-zA-Z][-a-zA-Z0-9]*)"
-    rf"((?:{_WS}+{_ATTR_NAME}(?:{_WS}*={_WS}*(?:{_ATTR_VALUE}))?)*)"
-    rf"{_WS}*(/?)>"
-    rf"|</([a-zA-Z][-a-zA-Z0-9]*){_WS}*>"
-    r"|<!--(.*?)--\s*>"
-    r"|<!([dD][oO][cC][tT][yY][pP][eE][^>]*)>",
+    rf"|<({_TAG_NAME})({_ATTRS}){_WS}*(/?)>"
+    rf"|</({_TAG_NAME}){_WS}*>"
+    rf"|{_COMMENT}|{_DOCTYPE}",
     re.S)
 # splits an attribute source the token pattern has already accepted
 _ATTR_RE = re.compile(
@@ -311,9 +315,32 @@ _RAW_TEXT_END = {name: re.compile(r"</\s*%s\s*>" % name, re.I)
                  for name in HTMLParser.CDATA_CONTENT_ELEMENTS}
 
 
+def _any_case(name: str) -> str:
+    return "".join(f"[{c}{c.upper()}]" for c in name)
+
+
+# The whole grammar as one possessive pattern: a page outside it is
+# rejected by one scan in C before any tree is built, so a declined page
+# costs little more than its html.parser parse.  Raw-text content runs
+# to the first closer ``_RAW_TEXT_END`` would find.
+_RAW_NAMES = "|".join(map(_any_case, HTMLParser.CDATA_CONTENT_ELEMENTS))
+_PAGE_RE = re.compile(
+    r"(?:[^<]++"
+    rf"|</{_TAG_NAME}{_WS}*>"
+    rf"|<(?!(?:{_RAW_NAMES})[ \t\n\r\f/>]){_TAG_NAME}{_ATTRS}{_WS}*/?>"
+    + "".join(
+        rf"|<{_any_case(name)}{_ATTRS}{_WS}*(?:/>|>[^<]*+"
+        rf"(?:<(?!/\s*(?i:{name})\s*>)[^<]*+)*+</\s*(?i:{name})\s*>)"
+        for name in HTMLParser.CDATA_CONTENT_ELEMENTS)
+    + rf"|{_COMMENT}|{_DOCTYPE})*+\Z",
+    re.S)
+
+
 def _parse_strict(html: str) -> Optional[Node]:
     """Tree of ``html`` from the strict tokenizer, or ``None`` when the
     page leaves its grammar (the caller then uses ``html.parser``)."""
+    if _PAGE_RE.match(html) is None:
+        return None
     builder = _TreeBuilder()
     on_data, on_start = builder.handle_data, builder.handle_starttag
     on_startend, on_end = builder.handle_startendtag, builder.handle_endtag

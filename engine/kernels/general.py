@@ -70,16 +70,10 @@ class TagIdentifier:
     attributes: Dict[str, object] = field(default_factory=dict)
     # G6 replay matches on the attributes minus the value-bearing keys;
     # computed once per step, not once per step per sibling container
-    _match_attrs: Optional[Dict[str, object]] = field(
-        default=None, init=False, repr=False, compare=False)
-
-    @property
+    @functools.cached_property
     def match_attrs(self) -> Dict[str, object]:
-        if self._match_attrs is None:
-            self._match_attrs = {
-                k: v for k, v in self.attributes.items()
+        return {k: v for k, v in self.attributes.items()
                 if k not in C.ATTRIBUTES_MAY_CONTAIN_VALUES}
-        return self._match_attrs
 
     @staticmethod
     def from_element(el: Node, first_class_only: bool = False) -> "TagIdentifier":

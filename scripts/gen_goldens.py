@@ -192,6 +192,36 @@ def _random_markup(rng) -> str:
         else body
 
 
+# fragments that move a page into or out of the strict tokenizer's
+# grammar (engine/dom.py); shared by the DOM differential tests and
+# scripts/kernel_bench.py
+_MUTATION_BITS = [
+    "<", ">", "/", "=", '"', "'", "&", "&amp", "&#", ";", " ", "\t", "\n",
+    "\r", "\x0b", "\xa0", "\x00", "<!--", "-->", "--!>", "<!", "<?", "</",
+    "/>", "<b", "<SCRIPT>", "</script>", "</ script >", "<style>",
+    "</STYLE >", "<!DOCTYPE html>", "<![CDATA[x]]>", "a", "Z", "-", ":",
+    "_", ".", "#", "`", "\u017f", "é", "<a b=c>", "<a b='c'", "x=y",
+    "<p/ >", "<br/>"]
+
+
+def mutate_markup(rng, page: str) -> str:
+    """One to four random edits: insert a markup-significant fragment,
+    delete a short run, swap the case of a run, or truncate."""
+    for _ in range(rng.randint(1, 4)):
+        r = rng.random()
+        i = rng.randint(0, len(page))
+        if r < 0.45:
+            page = page[:i] + rng.choice(_MUTATION_BITS) + page[i:]
+        elif r < 0.7:
+            page = page[:i] + page[i + rng.randint(1, 6):]
+        elif r < 0.85:
+            j = min(len(page), i + rng.randint(1, 20))
+            page = page[:i] + page[i:j].swapcase() + page[j:]
+        else:
+            page = page[:i]
+    return page
+
+
 def build_parity_corpus(spark) -> list:
     """The parity corpus as a list of (conv_id, turn_idx, role, text,
     ts) dicts, built from repository inputs only."""

@@ -5,13 +5,20 @@ Run: python scripts/kernel_bench.py  → one JSON line.  Besides the
 turns/s figures it splits each markup family (general / table / json,
 400 pages each, min of 5 passes) into DOM-parse µs and strategy-ladder
 µs per page, and reports the share of pages the strict tokenizer
-accepts (the rest fall back to html.parser).
+accepts (the rest fall back to html.parser).  It also times pages
+outside the tokenizer's grammar, where parse_html declines and runs
+html.parser: each family page with an out-of-grammar tag just before
+``</body>``, fixed-seed mutated ``gen_goldens._random_markup`` pages, and
+the parity corpus's markup pages.  For each it prints parse_html µs, the
+html.parser-only µs on the same pages (the cost before the strict
+tokenizer existed) and the strict share.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import random
 import sys
 import time
 
@@ -20,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from engine import dom  # noqa: E402
 from engine.parser import extract_from_root, extract_turn  # noqa: E402
 from engine.query_parse import parse_query_hybrid  # noqa: E402
+from scripts.gen_goldens import (  # noqa: E402
+    _GOLDENS_DIR, _random_markup, mutate_markup)
 
 
 def _families():
@@ -74,6 +83,54 @@ def _family_split(parsed, per_family: int = 400, passes: int = 5) -> dict:
     return out
 
 
+def _min_us(fns, pages, passes: int) -> list:
+    """Min µs per page of each function over ``passes`` interleaved
+    passes, so host drift hits every function alike."""
+    best = [float("inf")] * len(fns)
+    for _ in range(passes):
+        for i, fn in enumerate(fns):
+            t0 = time.perf_counter()
+            for page in pages:
+                fn(page)
+            best[i] = min(best[i], (time.perf_counter() - t0) / len(pages) * 1e6)
+    return [round(b, 1) for b in best]
+
+
+def _decline_split(per_set: int = 200, passes: int = 7) -> dict:
+    """parse_html vs html.parser-only µs per page, and the strict share,
+    on pages the strict tokenizer declines or may decline."""
+    gen, tab, js = _families()
+
+    def tail(make, bad):
+        return [make(d, 1).replace("</body>", bad + "</body>")
+                for d in range(per_set)]
+
+    rng = random.Random(7)
+    with open(os.path.join(_GOLDENS_DIR, "parity_corpus.json")) as f:
+        corpus = [r["text"] for r in json.load(f)
+                  if r["text"] and "<" in r["text"]]
+    sets = {
+        "general_tail_unquoted_href": tail(gen, "<a href=/p/1>x</a>"),
+        "table_tail_percent_width": tail(tab, "<td width=50%>x</td>"),
+        "json_tail_xml_pi": tail(js, '<?xml version="1.0"?>'),
+        "general_tail_stray_lt": tail(gen, "a < b"),
+        "mutated_random_markup": [mutate_markup(rng, _random_markup(rng))
+                                  for _ in range(per_set)],
+        "parity_corpus_markup": corpus,
+    }
+    out = {}
+    for name, pages in sets.items():
+        parse_us, htmlparser_us = _min_us(
+            (dom.parse_html, dom._parse_htmlparser), pages, passes)
+        out[name] = {
+            "parse_us": parse_us,
+            "htmlparser_us": htmlparser_us,
+            "strict_share": round(sum(dom._parse_strict(p) is not None
+                                      for p in pages) / len(pages), 4),
+        }
+    return out
+
+
 def main() -> int:
     parsed = parse_query_hybrid("Can you give me the book: name and price?")
     gen, tab, js = _families()
@@ -125,6 +182,7 @@ def main() -> int:
         best_pdf = max(best_pdf, 2000 / (time.time() - t0))
 
     split = _family_split(parsed)
+    declines = _decline_split()
 
     print(json.dumps({
         "small_turns_per_sec_1core": round(best_small, 1),
@@ -138,6 +196,7 @@ def main() -> int:
         "family_ladder_us_1core": split["ladder_us"],
         "strict_tokenizer_share": split["strict_tokenizer_share"],
         "big_page_strict_tokenizer": dom._parse_strict(big) is not None,
+        "out_of_grammar_parse_1core": declines,
     }))
     return 0
 

@@ -3,11 +3,12 @@ differ from browser/html5lib behavior — we pin the html.parser-family
 behavior the reference observes through bs4."""
 
 import random
+import re
 
 from engine import dom
 from engine.dom import parse_html
 from engine.kernels import general, table
-from scripts.gen_goldens import _random_markup, dom_dump
+from scripts.gen_goldens import _random_markup, dom_dump, mutate_markup
 
 
 def test_unclosed_li_nests_like_htmlparser():
@@ -91,33 +92,6 @@ def test_entity_edge_cases_in_text():
 
 # --- strict tokenizer vs the installed html.parser ------------------------
 
-_MUTATION_BITS = [
-    "<", ">", "/", "=", '"', "'", "&", "&amp", "&#", ";", " ", "\t", "\n",
-    "\r", "\x0b", "\xa0", "\x00", "<!--", "-->", "--!>", "<!", "<?", "</",
-    "/>", "<b", "<SCRIPT>", "</script>", "</ script >", "<style>",
-    "</STYLE >", "<!DOCTYPE html>", "<![CDATA[x]]>", "a", "Z", "-", ":",
-    "_", ".", "#", "`", "\u017f", "é", "<a b=c>", "<a b='c'", "x=y",
-    "<p/ >", "<br/>"]
-
-
-def _mutate(rng, page):
-    """One to four random edits: insert a markup-significant fragment,
-    delete a short run, swap the case of a run, or truncate."""
-    for _ in range(rng.randint(1, 4)):
-        r = rng.random()
-        i = rng.randint(0, len(page))
-        if r < 0.45:
-            page = page[:i] + rng.choice(_MUTATION_BITS) + page[i:]
-        elif r < 0.7:
-            page = page[:i] + page[i + rng.randint(1, 6):]
-        elif r < 0.85:
-            j = min(len(page), i + rng.randint(1, 20))
-            page = page[:i] + page[i:j].swapcase() + page[j:]
-        else:
-            page = page[:i]
-    return page
-
-
 def test_strict_tokenizer_matches_htmlparser_on_mutated_pages():
     """Fixed-seed mutation fuzz over the parity corpus's tag-soup
     generator: wherever the strict tokenizer accepts a page, its tree
@@ -126,7 +100,7 @@ def test_strict_tokenizer_matches_htmlparser_on_mutated_pages():
     rng = random.Random(5)
     fast = 0
     for _ in range(4000):
-        page = _mutate(rng, _random_markup(rng))
+        page = mutate_markup(rng, _random_markup(rng))
         strict = dom._parse_strict(page)
         if strict is None:
             continue
@@ -134,6 +108,22 @@ def test_strict_tokenizer_matches_htmlparser_on_mutated_pages():
         assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(page)), page
     # the fuzz must exercise the strict path, not only its declines
     assert fast > 1000
+
+
+def test_strict_precheck_declines_what_the_token_loop_declines(monkeypatch):
+    """The whole-page pattern that rejects a page before any tree is
+    built agrees with the token loop run without it: it neither drops
+    pages from the strict path nor lets declined pages build a tree
+    first.  The one tolerated gap is a raw-text closer with non-ASCII
+    characters, which only the loop declines."""
+    rng = random.Random(8)
+    pages = [mutate_markup(rng, _random_markup(rng)) for _ in range(2000)]
+    prechecked = [dom._PAGE_RE.match(page) is not None for page in pages]
+    monkeypatch.setattr(dom, "_PAGE_RE", re.compile(""))
+    for page, precheck in zip(pages, prechecked):
+        loop = dom._parse_strict(page) is not None
+        assert precheck == loop or (precheck and not page.isascii()), page
+    assert 500 < sum(prechecked) < 1800
 
 
 def test_unmutated_random_markup_takes_the_strict_path():
