@@ -92,6 +92,21 @@ def test_entity_edge_cases_in_text():
 
 # --- strict tokenizer vs the installed html.parser ------------------------
 
+# just inside the strict tokenizer's grammar
+_EDGE_PAGES = [
+    "<!-- a --\x0b> b --><p>c</p>", "<!--->x-->y", "<!DOCTYPE>t",
+    "<p>tail &x", "<p>&#1;&nbsp;&amp</p>",
+    "<SCRIPT type=x>a</Script\x0c><p>", "<style></style >",
+    "<a b = 'c' d=e-f:g.h#i>x</a\n>", "<br/><br /><p/>",
+    '<p class="a" class="b" x=\'&lt;\'>', "a > b"]
+# just outside it
+_OUT_OF_GRAMMAR_PAGES = [
+    "a < b", "x<", "<?xml version='1.0'?><p>x</p>", "<![CDATA[x]]>",
+    "<script>no closer", "<a b=c/>", '<a href="x"title="y">',
+    "<div\x0bclass='a'>", "<!-- unclosed", "</ div>", "<o:p>x</o:p>",
+    "<script>x</\u017fcript></script>"]
+
+
 def test_strict_tokenizer_matches_htmlparser_on_mutated_pages():
     """Fixed-seed mutation fuzz over the parity corpus's tag-soup
     generator: wherever the strict tokenizer accepts a page, its tree
@@ -111,13 +126,15 @@ def test_strict_tokenizer_matches_htmlparser_on_mutated_pages():
 
 
 def test_strict_precheck_declines_what_the_token_loop_declines(monkeypatch):
-    """The whole-page pattern that rejects a page before any tree is
-    built agrees with the token loop run without it: it neither drops
-    pages from the strict path nor lets declined pages build a tree
-    first.  The one tolerated gap is a raw-text closer with non-ASCII
-    characters, which only the loop declines."""
+    """On mutated and edge pages, the whole-page pattern that rejects a
+    page before any tree is built agrees with the token loop run
+    without it: it neither drops pages from the strict path nor lets
+    declined pages build a tree first.  The one tolerated gap is a
+    raw-text closer with non-ASCII characters, which only the loop
+    declines."""
     rng = random.Random(8)
     pages = [mutate_markup(rng, _random_markup(rng)) for _ in range(2000)]
+    pages += _EDGE_PAGES + _OUT_OF_GRAMMAR_PAGES
     prechecked = [dom._PAGE_RE.match(page) is not None for page in pages]
     monkeypatch.setattr(dom, "_PAGE_RE", re.compile(""))
     for page, precheck in zip(pages, prechecked):
@@ -136,22 +153,14 @@ def test_unmutated_random_markup_takes_the_strict_path():
 
 
 def test_strict_tokenizer_edge_pages_match_htmlparser():
-    for page in ["<!-- a --\x0b> b --><p>c</p>", "<!--->x-->y",
-                 "<!DOCTYPE>t", "<p>tail &x", "<p>&#1;&nbsp;&amp</p>",
-                 "<SCRIPT type=x>a</Script\x0c><p>", "<style></style >",
-                 "<a b = 'c' d=e-f:g.h#i>x</a\n>", "<br/><br /><p/>",
-                 '<p class="a" class="b" x=\'&lt;\'>', "a > b"]:
+    for page in _EDGE_PAGES:
         strict = dom._parse_strict(page)
         assert strict is not None, page
         assert dom_dump(strict) == dom_dump(dom._parse_htmlparser(page))
 
 
 def test_strict_tokenizer_declines_outside_its_grammar():
-    for page in ["a < b", "x<", "<?xml version='1.0'?><p>x</p>",
-                 "<![CDATA[x]]>", "<script>no closer", "<a b=c/>",
-                 '<a href="x"title="y">', "<div\x0bclass='a'>",
-                 "<!-- unclosed", "</ div>", "<o:p>x</o:p>",
-                 "<script>x</\u017fcript></script>"]:
+    for page in _OUT_OF_GRAMMAR_PAGES:
         assert dom._parse_strict(page) is None, page
         # parse_html still builds html.parser's tree for them
         assert dom_dump(parse_html(page)) == dom_dump(
